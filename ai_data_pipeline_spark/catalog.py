@@ -10,9 +10,13 @@ rendering for pattern matching (see profiling/profiler.py).
 
 from __future__ import annotations
 
+import json
+import os
+
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql import types as T
 
 # kind ∈ {int, long, double, string, timestamp, vector}
 TABLES: dict[str, list[tuple[str, str]]] = {
@@ -81,28 +85,82 @@ TABLES: dict[str, list[tuple[str, str]]] = {
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+# Spark's parquet package, whose footer-to-schema rules the loads reuse
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself, or for a flat directory its first data file
+    (Spark skips names starting with ``_`` or ``.``); None for anything
+    else, e.g. a partitioned directory."""
+    if not os.path.isdir(path):
+        return path
+    names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    if not names or any(os.path.isdir(os.path.join(path, n)) for n in names):
+        return None
+    return os.path.join(path, names[0])
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for a parquet file or directory, with
+    ``legacy.parquet.nanosAsLong`` on (set here), so TIMESTAMP(NANOS)
+    columns come out as raw nanosecond longs.
+
+    For a file or a flat directory this reads one footer on the driver
+    and applies Spark's own rules to it: ``readSchemaFromFooter`` takes a
+    Spark-written footer's row-metadata schema (which covers INT96),
+    otherwise ``ParquetToSparkSchemaConverter`` under the session conf,
+    and every field is made nullable as in a file read. That is what
+    Spark's inference does with the same footer, minus the job it
+    launches to read it. Any other layout takes Spark's inferring read.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return spark.read.parquet(path).schema
+
+    def jclass(name: str) -> JavaClass:
+        # a direct handle: resolving a dotted name through ``spark._jvm``
+        # costs one JVM class lookup per package segment
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    state = spark._jsparkSession.sessionState()
+    file = jclass("org.apache.hadoop.fs.Path")(data_file)
+    reader = jclass("org.apache.parquet.hadoop.ParquetFileReader")
+    footer = jclass("org.apache.parquet.hadoop.Footer")(
+        file, reader.readFooter(state.newHadoopConf(), file)
+    )
+    converter = jclass(_SPARK_PARQUET + "ParquetToSparkSchemaConverter")(state.conf())
+    fmt = getattr(jclass(_SPARK_PARQUET + "ParquetFileFormat$"), "MODULE$")
+    schema = fmt.readSchemaFromFooter(footer, converter).asNullable()
+    return T.StructType.fromJson(json.loads(schema.json()))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst pushes filters/projections into it.
 
-    Pandas-written parquet may carry TIMESTAMP(NANOS) columns, which Spark
-    does not read natively; we read them as raw nanosecond longs
-    (legacy.parquet.nanosAsLong) and convert to microsecond timestamps.
-    Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) columns are inferred as
-    TIMESTAMP_NTZ by Spark 4; we cast those back to TIMESTAMP (session TZ is
-    UTC, so the wall-clock values are unchanged and oracle parity holds),
-    keeping the catalog schema (TABLES) authoritative.
+    The schema comes from the parquet footer (``parquet_schema``), so the
+    load launches no schema-inference job. Pandas-written parquet may
+    carry TIMESTAMP(NANOS) columns, which Spark does not read natively; we
+    read them as raw nanosecond longs (legacy.parquet.nanosAsLong) and
+    convert to microsecond timestamps. Parquet TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) columns are inferred as TIMESTAMP_NTZ by Spark
+    4; we cast those back to TIMESTAMP (session TZ is UTC, so the
+    wall-clock values are unchanged and oracle parity holds), keeping the
+    catalog schema (TABLES) authoritative.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     declared = dict(TABLES.get(name, []))
-    for field in df.schema.fields:
+    for field in schema.fields:
         if declared.get(field.name) != "timestamp":
             continue
-        if isinstance(field.dataType, LongType):
+        if isinstance(field.dataType, T.LongType):
             df = df.withColumn(
                 field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
             )
-        elif isinstance(field.dataType, TimestampNTZType):
+        elif isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
 

@@ -2253,8 +2253,7 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _book_row(book, "tb_arr")
     )
     dists = (
-        _spread(vfp.filter(F.col("vec_id") >= N_QUERIES))
-        .crossJoin(F.broadcast(books_row))
+        corpus.crossJoin(F.broadcast(books_row))
         .select(
             F.expr(_pq_distortion_expr("sb_arr")).alias("sd"),
             F.expr(_pq_distortion_expr("tb_arr")).alias("td"),

@@ -1,31 +1,34 @@
 """Single-pass Spark column profiler.
 
 Re-expresses the reference's per-column pandas loops
-(pattern_classifier.py:110-137 / base.py:121-152) as ONE wide
-``df.agg(...)`` over the whole table:
+(pattern_classifier.py:110-137 / base.py:121-152) as one job over the
+whole table: the scalar columns are melted into (column id, rendering)
+pairs, counted per distinct rendering, then aggregated per column:
 
     count(*), and per column: count, count(distinct),
     one regex-hit count per pattern (21), BK-code hits, sorted sample
 
-— a single scan with partial+final hash aggregation and whole-stage
-codegen. No per-column passes, no driver-side data loops: the only thing
-that leaves the executors is one tiny stats row of width O(C·P).
+— a single scan with two keyed hash aggregations and whole-stage
+codegen (see ``_scalar_stats``). No per-column passes, no driver-side
+data loops: the only thing that leaves the executors is one tiny stats
+row per column. The statistics are built as SQL expression strings,
+like the cascade, so building the plan costs a few JVM calls rather than
+one per Column node.
 
 Scale notes (100 TB posture):
 - The scan is columnar parquet; Catalyst prunes to exactly the profiled
   columns.
-- ``count(distinct)`` over many columns expands via Spark's Expand
-  operator (one replicated stream per distinct aggregate). That is the
-  correct exact-path plan; at the 100 TB tier pass
-  ``exact_distinct=False`` to use ``approx_count_distinct`` (HLL sketch,
-  no Expand) — the oracle-checked path keeps exact.
+- Exact distinct counts are the number of first-level groups per
+  column, so no Expand operator is needed; at the 100 TB tier pass
+  ``exact_distinct=False`` to use ``approx_count_distinct`` (HLL sketch)
+  instead — the oracle-checked path keeps exact.
 - The cascade runs on the exploded stats rows (C rows), declared via the
   same SQL expression strings the DuckDB oracle uses (cascade.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,44 +63,46 @@ def kind_of(dtype: T.DataType) -> str:
     return "other"
 
 
-def _qcol(name: str) -> Column:
+def _qname(name: str) -> str:
     """Backtick-quoted column reference: profiled inputs are arbitrary
-    uploads, so names may contain dots/spaces that F.col would otherwise
-    parse as struct access (op35 robustness)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    uploads, so names may contain dots/spaces that would otherwise parse
+    as struct access (op35 robustness)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def render_expr(col: str, kind: str) -> Column | None:
-    """String rendering used for pattern matching — the Spark analogue of
-    the reference's ``sample.astype(str)`` (pattern_classifier.py:73).
+def sql_str(s: str) -> str:
+    """Spark SQL string literal. Spark unescapes backslash sequences inside
+    literals, so backslashes are doubled and quotes backslash-escaped
+    (cascade._sq's quote doubling is DuckDB's rule, which has no backslash
+    escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Renderings are chosen to agree byte-for-byte with the DuckDB oracle's
-    (oracle.py): plain cast for ints/doubles/bools, explicit second-
-    precision formatting for timestamps. (Caveat, documented: Java
-    renders |x| >= 1e7 doubles in scientific notation where DuckDB does
-    not — irrelevant for pattern ratios unless a column straddles 1e7.)
+
+def render_sql(col: str, kind: str) -> str | None:
+    """Lossless string rendering, as Spark SQL, used for pattern matching —
+    the Spark analogue of the reference's ``sample.astype(str)``
+    (pattern_classifier.py:73).
+
+    Mirrors the DuckDB oracle's ``duck_render`` (oracle.py): plain cast
+    for ints/doubles/bools, explicit formatting for dates and timestamps.
+    Timestamps keep microsecond precision (Spark's native resolution) so
+    the rendering is injective — distinct renderings == distinct values,
+    and ``count(distinct col)`` can be computed on the melted string
+    stream; the matching rendering (second precision, as the oracle's) is
+    its first 19 chars. (Caveat, documented: Java renders |x| >= 1e7
+    doubles in scientific notation where DuckDB does not — irrelevant for
+    pattern ratios unless a column straddles 1e7.)
     """
-    c = _qcol(col)
+    c = _qname(col)
     if kind == "string":
         return c
     if kind in ("int", "long", "double", "boolean"):
-        return c.cast("string")
+        return f"CAST({c} AS STRING)"
     if kind == "timestamp":
-        return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
+        return f"date_format({c}, 'yyyy-MM-dd HH:mm:ss.SSSSSS')"
     if kind == "date":
-        return F.date_format(c, "yyyy-MM-dd")
+        return f"date_format({c}, 'yyyy-MM-dd')"
     return None  # vector/binary/other: no string rendering
-
-
-def lossless_render_expr(col: str, kind: str) -> Column | None:
-    """Injective string rendering — distinct renderings == distinct values,
-    so ``count(distinct col)`` can be computed on the melted string stream.
-    Identical to render_expr except timestamps keep microsecond precision
-    (Spark's native resolution). The *matching* rendering is recovered from
-    it by truncation (first 19 chars for timestamps)."""
-    if kind == "timestamp":
-        return F.date_format(_qcol(col), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-    return render_expr(col, kind)
 
 
 def _scalar_stats(
@@ -107,8 +112,8 @@ def _scalar_stats(
 
     Plan shape (one scan, two keyed shuffles, NO Expand operator):
 
-      scan → explode to (cid, lossless_render)            [C× rows, map-side]
-           → groupBy(cid, render) count                   [shuffle 1: distincts]
+      scan → inline to (cid, render_l)                    [C× rows, map-side]
+           → groupBy(cid, render_l) count                 [shuffle 1: distincts]
            → groupBy(cid): weighted regex hits, counts,   [shuffle 2: C rows]
              distinct count, sorted sample
 
@@ -116,15 +121,18 @@ def _scalar_stats(
     on raw rows — for low-cardinality columns (flags, dates, quantities)
     that is orders of magnitude less regex work, and it is exactly
     equivalent because the hit count is sum(cnt · matches(v)) either way.
-    The lossless rendering is injective, so count(distinct render) ==
+    The rendering is injective, so count(distinct render_l) ==
     count(distinct value). Map-side partial aggregation absorbs the C×
-    explode before the shuffle; high-cardinality columns degrade
-    gracefully to ~row-count work (hash agg spills as needed).
+    melt before the shuffle; high-cardinality columns degrade gracefully
+    to ~row-count work (hash agg spills as needed).
+
+    Every expression is a SQL string, parsed in the JVM in one call,
+    rather than a tree of Column calls that each cross to the JVM.
     """
     scalars = [
-        (i, c, kind)
+        (i, render)
         for i, (c, kind) in enumerate(columns)
-        if render_expr(c, kind) is not None
+        if (render := render_sql(c, kind)) is not None
     ]
     if not scalars:
         return None
@@ -134,93 +142,70 @@ def _scalar_stats(
         # no matter its size; redistribute first. No-ops at cluster scale
         # where the scan already has thousands of splits.
         df = df.repartition(parallelism)
-    pairs = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("cid"),
-                        lossless_render_expr(c, kind).alias("render_l"),
-                    )
-                    for i, c, kind in scalars
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
-    level1 = pairs.groupBy("cid", "render_l").agg(F.count(F.lit(1)).alias("cnt"))
-
-    ts_cids = [i for i, c, kind in scalars if kind == "timestamp"]
-    render = (
-        F.when(F.col("cid").isin(ts_cids), F.substring("render_l", 1, 19)).otherwise(
-            F.col("render_l")
-        )
-        if ts_cids
-        else F.col("render_l")
+    melt = ", ".join(
+        f"named_struct('cid', {i}, 'render_l', {render})" for i, render in scalars
     )
-    level1 = level1.withColumn("render", render)
+    level1 = (
+        df.selectExpr(f"inline(array({melt}))")
+        .groupBy("cid", "render_l")
+        .agg(F.expr("count(1) AS cnt"))
+    )
+
+    ts_cids = [i for i, (c, kind) in enumerate(columns) if kind == "timestamp"]
+    render = (
+        f"CASE WHEN cid IN ({', '.join(map(str, ts_cids))}) "
+        "THEN substring(render_l, 1, 19) ELSE render_l END"
+        if ts_cids
+        else "render_l"
+    )
+    level1 = level1.selectExpr("*", f"{render} AS render")
 
     n_distinct = (
-        F.count("render_l")
+        "count(render_l)"
         # rsd 0.02 (~2.7k registers, a few KB/column, still mergeable):
         # keeps the sketch within the ±5% bound the property tests pin
         # (default 0.05 measured 6.6% off on l_shipdate at sf0.001)
         if exact_distinct
-        else F.approx_count_distinct("render_l", 0.02)
+        else "approx_count_distinct(render_l, 0.02)"
     )
     aggs = [
-        F.sum("cnt").alias("n_total"),
-        F.sum(F.when(F.col("render_l").isNotNull(), F.col("cnt")).otherwise(0)).alias(
-            "n_nonnull"
-        ),
-        n_distinct.alias("n_distinct"),
+        "sum(cnt) AS n_total",
+        "sum(CASE WHEN render_l IS NOT NULL THEN cnt ELSE 0 END) AS n_nonnull",
+        f"{n_distinct} AS n_distinct",
     ]
-    for pname, rx in ((n, x) for _, n, x in P.PATTERNS):
+    for _, pname, rx in P.PATTERNS:
         aggs.append(
-            F.sum(
-                F.when(F.col("render").rlike(rx), F.col("cnt")).otherwise(0)
-            ).alias(f"h_{pname}")
+            f"sum(CASE WHEN render RLIKE {sql_str(rx)} THEN cnt ELSE 0 END) AS h_{pname}"
         )
     aggs.append(
-        F.concat_ws(
-            ",",
-            F.slice(
-                F.array_sort(F.collect_set(F.substring("render", 1, SAMPLE_TRUNC))),
-                1,
-                SAMPLE_N,
-            ),
-        ).alias("sample_values")
+        "concat_ws(',', slice(array_sort(collect_set("
+        f"substring(render, 1, {SAMPLE_TRUNC}))), 1, {SAMPLE_N})) AS sample_values"
     )
-    return level1.groupBy("cid").agg(*aggs)
+    return level1.groupBy("cid").agg(*map(F.expr, aggs))
 
 
 def _nonscalar_stats(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
     """Counts/distincts for vector/binary columns (no string rendering):
     one tiny wide agg, reshaped to per-cid rows."""
     nonscalars = [
-        (i, c, kind)
+        (i, _qname(c))
         for i, (c, kind) in enumerate(columns)
-        if render_expr(c, kind) is None
+        if render_sql(c, kind) is None
     ]
     if not nonscalars:
         return None
-    aggs = [F.count(F.lit(1)).alias("n_total")]
-    for i, c, _ in nonscalars:
-        aggs.append(F.count(_qcol(c)).alias(f"c{i}__nonnull"))
-        aggs.append(F.countDistinct(_qcol(c)).alias(f"c{i}__distinct"))
-    wide = df.agg(*aggs)
-    structs = []
-    for i, c, _ in nonscalars:
-        fields = [
-            F.lit(i).alias("cid"),
-            F.col("n_total").alias("n_total"),
-            F.col(f"c{i}__nonnull").alias("n_nonnull"),
-            F.col(f"c{i}__distinct").alias("n_distinct"),
-        ]
-        for pname in P.PATTERN_NAMES:
-            fields.append(F.lit(None).cast("long").alias(f"h_{pname}"))
-        fields.append(F.lit("").alias("sample_values"))
-        structs.append(F.struct(*fields))
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    aggs = ["count(1) AS n_total"]
+    for i, c in nonscalars:
+        aggs.append(f"count({c}) AS c{i}__nonnull")
+        aggs.append(f"count(DISTINCT {c}) AS c{i}__distinct")
+    wide = df.agg(*map(F.expr, aggs))
+    hits = "".join(f", 'h_{pname}', CAST(NULL AS BIGINT)" for pname in P.PATTERN_NAMES)
+    rows = ", ".join(
+        f"named_struct('cid', {i}, 'n_total', n_total, 'n_nonnull', c{i}__nonnull, "
+        f"'n_distinct', c{i}__distinct{hits}, 'sample_values', '')"
+        for i, _ in nonscalars
+    )
+    return wide.selectExpr(f"inline(array({rows}))")
 
 
 def profile_table(
@@ -265,12 +250,9 @@ def profile_table(
             "f_name_pii string, f_suggested string"
         ),
     )
-    stats_rel = (
-        flags.join(stats, "cid", "left")
-        .withColumn("n_total", F.coalesce("n_total", F.lit(0)))
-        .withColumn("n_nonnull", F.coalesce("n_nonnull", F.lit(0)))
-        .withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0)))
-        .withColumn("sample_values", F.coalesce("sample_values", F.lit("")))
+    zero = {"n_total": "0", "n_nonnull": "0", "n_distinct": "0", "sample_values": "''"}
+    stats_rel = flags.join(stats, "cid", "left").withColumns(
+        {c: F.expr(f"coalesce({c}, {z})") for c, z in zero.items()}
     )
 
     l1 = cascade.layer1_exprs()

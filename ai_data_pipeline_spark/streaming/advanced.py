@@ -34,7 +34,7 @@ from ai_data_pipeline_spark.streaming.windows import (
 
 # Schema of the three-batch source files _three_batch_source_dir writes
 # ITSELF (always NTZ by construction — independent of the driver
-# testdata's physical encoding, which windows._events_schema probes).
+# testdata's physical encoding, which windows._events_schema follows).
 _NTZ_EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

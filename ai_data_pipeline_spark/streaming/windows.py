@@ -19,24 +19,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_schema(sf_dir: str) -> tuple[T.StructType, str]:
-    """Declared streaming schema + ts normalization mode, chosen by
-    probing the parquet physical type. The driver testdata's timestamp
-    encoding has already changed once between rounds (TIMESTAMP(NANOS)
-    → TIMESTAMP(MICROS, adj=false)); probing keeps the streaming path
-    robust to a re-encode either way, mirroring catalog.load_table's
-    dual normalization."""
-    import pyarrow.parquet as pq
+from ai_data_pipeline_spark.catalog import parquet_schema
 
-    t = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
-    unit = getattr(t, "unit", None)
-    tz = getattr(t, "tz", None)
-    if unit == "ns":
-        ts_field, mode = T.LongType(), "nanos"  # read raw ns longs
-    elif tz is None:
-        ts_field, mode = T.TimestampNTZType(), "ntz"
+
+def _events_schema(spark: SparkSession, sf_dir: str) -> tuple[T.StructType, str]:
+    """Declared streaming schema + ts normalization mode, chosen by the
+    type Spark infers for ``ts`` from the footer (``parquet_schema``,
+    which also turns nanosAsLong on for the read). The testdata's
+    timestamp encoding has already changed once (TIMESTAMP(NANOS) →
+    TIMESTAMP(MICROS, adj=false)); following the footer keeps the
+    streaming path robust to a re-encode either way, mirroring
+    catalog.load_table's dual normalization."""
+    ts_field = parquet_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType
+    if isinstance(ts_field, T.LongType):
+        mode = "nanos"  # read raw ns longs
+    elif isinstance(ts_field, T.TimestampNTZType):
+        mode = "ntz"
     else:
-        ts_field, mode = T.TimestampType(), "utc"
+        mode = "utc"
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -52,11 +52,9 @@ def _events_schema(sf_dir: str) -> tuple[T.StructType, str]:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based streaming source over the events parquet (one file =
-    one micro-batch under availableNow); ts normalized per the probed
-    physical encoding (session TZ is UTC, so wall-clock is preserved)."""
-    schema, mode = _events_schema(sf_dir)
-    if mode == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    one micro-batch under availableNow); ts normalized per its footer
+    type (session TZ is UTC, so wall-clock is preserved)."""
+    schema, mode = _events_schema(spark, sf_dir)
     raw = (
         spark.readStream.schema(schema)
         .format("parquet")

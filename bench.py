@@ -231,6 +231,64 @@ HEADLINE = [
 ]
 
 
+# The stdout line must fit the 2000-char tail of stdout that its
+# consumer keeps and parses, and the full names of all timed queries do
+# not, so it carries this FIXED set of 74 names in priority order
+# (watchlist, flagships, profiles, then HEADLINE order). Truncating the set to fit made the
+# emitted names depend on digit widths, which read as a query dropped
+# from the bench; when digits overflow the budget, value precision
+# degrades instead (stdout_line). The complete full-precision record
+# for all queries is committed in BENCH_SELF.json.
+STDOUT_QUERIES = [
+    "emb_prefix_recall", "q5_region_revenue", "q3_top_orders",
+    "ann_ivf", "q_time_bucket_rollup", "dedup_minhash_lsh",
+    "dedup_minhash_estimate", "ann_rerank", "profile_customer",
+    "profile_lineitem", "profile_events", "q1_pricing_summary",
+    "q6_forecast_revenue", "q18_large_orders", "q7_nation_trade",
+    "q17_small_quantity_revenue", "q10_returned_items",
+    "q19_discounted_revenue", "q_cheapest_supplier",
+    "q8_market_share", "q9_product_profit", "q13_order_distribution",
+    "q21_waiting_suppliers", "q_moving_avg_7d", "q_outliers_iqr",
+    "q_zscore_outliers", "q_heavy_hitter_users", "q_gap_fill_locf",
+    "q_upsert_merge", "q_salted_join_revenue",
+    "graph_pagerank_nations", "dedup_chunk_passages",
+    "pyds_synthetic_agg", "sketch_countmin_users",
+    "sketch_bloom_filter_join", "q_corr_matrix", "q_chi_square",
+    "er_fuzzy_linkage", "text_feature_hashing", "q_events_window",
+    "q_sliding_window", "q_asof_join", "q_range_join", "q_sessionize",
+    "q_event_funnel", "q_event_transitions", "q_cohort_retention",
+    "q_time_weighted_avg", "q_zorder_layout", "q_daily_distinct_users",
+    "pipeline_clean_corpus", "dedup_exact", "dedup_clusters",
+    "text_stats", "text_lang_id", "text_tfidf_top_terms",
+    "udaf_sum_sq", "dq_checks", "schema_drift", "ann_cosine_topk",
+    "ann_lsh_buckets", "dedup_embedding_cosine",
+    "emb_kmeans_fixed_point", "multimodal_byte_features",
+    "multimodal_frame_sample", "multimodal_audio_energy",
+    "dq_benford_check", "corpus_decontaminate",
+    "corpus_repetition_signals", "corpus_split_assign",
+    "corpus_mixing_weights", "corpus_sequence_packing",
+    "corpus_oov_rate", "sql_recursive_closure",
+]
+STDOUT_LIMIT = 1990
+
+
+def stdout_line(out: dict, timings: dict[str, float]) -> str:
+    """The compact JSON stdout line over STDOUT_QUERIES: value precision
+    steps down 2 → 1 → 0 decimals until the line fits STDOUT_LIMIT;
+    raises if it still does not, rather than print a line that would be
+    cut off."""
+    for ndigits in (2, 1, None):
+        out["queries"] = {
+            k: round(timings[k], ndigits) for k in STDOUT_QUERIES
+        }  # ndigits=None -> int, the last-resort 0-decimal rung
+        line = json.dumps(out, separators=(",", ":"))
+        if len(line) <= STDOUT_LIMIT:
+            return line
+    raise ValueError(
+        f"bench stdout line is {len(line)} chars, over the {STDOUT_LIMIT} limit"
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 4, 32)
@@ -321,65 +379,11 @@ def main() -> None:
             fh.write("\n")
     except OSError:
         pass  # read-only checkout: stdout line still carries the result
-    # stdout line must fit the driver's 2000-char tail buffer to parse.
-    # 112 full-name entries cannot fit 2000 chars (names alone exceed
-    # the budget), so the stdout dict carries the FIXED priority set
-    # below. Through round 14 the set was "priority order, truncated
-    # from the end to fit" — which made the emitted SET depend on digit
-    # widths (75 entries fit in r13, 74 in r14), so each round the
-    # driver's round-over-round diff reported a phantom
-    # `dropped_from_bench` for whichever trailing entry fell off
-    # (r14: emb_scalar_quantize — still timed, still in BENCH_SELF;
-    # VERDICT r14 "what's wrong" #1). Round-15 fix (measurement-bug
-    # class, guide §1): the stdout set is pinned to EXACTLY the 74
-    # names the round-14 driver parsed, in the same priority order
-    # (watchlist, flagships, profiles, then HEADLINE order); if a
-    # throttled window ever inflates digits past the budget, VALUE
-    # PRECISION degrades (2 → 1 → 0 decimals) but membership never
-    # changes. The complete full-precision record for all queries is
-    # committed in BENCH_SELF.json.
-    stdout_queries = [
-        "emb_prefix_recall", "q5_region_revenue", "q3_top_orders",
-        "ann_ivf", "q_time_bucket_rollup", "dedup_minhash_lsh",
-        "dedup_minhash_estimate", "ann_rerank", "profile_customer",
-        "profile_lineitem", "profile_events", "q1_pricing_summary",
-        "q6_forecast_revenue", "q18_large_orders", "q7_nation_trade",
-        "q17_small_quantity_revenue", "q10_returned_items",
-        "q19_discounted_revenue", "q_cheapest_supplier",
-        "q8_market_share", "q9_product_profit", "q13_order_distribution",
-        "q21_waiting_suppliers", "q_moving_avg_7d", "q_outliers_iqr",
-        "q_zscore_outliers", "q_heavy_hitter_users", "q_gap_fill_locf",
-        "q_upsert_merge", "q_salted_join_revenue",
-        "graph_pagerank_nations", "dedup_chunk_passages",
-        "pyds_synthetic_agg", "sketch_countmin_users",
-        "sketch_bloom_filter_join", "q_corr_matrix", "q_chi_square",
-        "er_fuzzy_linkage", "text_feature_hashing", "q_events_window",
-        "q_sliding_window", "q_asof_join", "q_range_join", "q_sessionize",
-        "q_event_funnel", "q_event_transitions", "q_cohort_retention",
-        "q_time_weighted_avg", "q_zorder_layout", "q_daily_distinct_users",
-        "pipeline_clean_corpus", "dedup_exact", "dedup_clusters",
-        "text_stats", "text_lang_id", "text_tfidf_top_terms",
-        "udaf_sum_sq", "dq_checks", "schema_drift", "ann_cosine_topk",
-        "ann_lsh_buckets", "dedup_embedding_cosine",
-        "emb_kmeans_fixed_point", "multimodal_byte_features",
-        "multimodal_frame_sample", "multimodal_audio_energy",
-        "dq_benford_check", "corpus_decontaminate",
-        "corpus_repetition_signals", "corpus_split_assign",
-        "corpus_mixing_weights", "corpus_sequence_packing",
-        "corpus_oov_rate", "sql_recursive_closure",
-    ]
     out.pop("reps", None)
     out.pop("estimator", None)
     out["metric"] = "headline_total"
-    out["queries_omitted"] = len(timings) - len(stdout_queries)
-    for ndigits in (2, 1, None):
-        out["queries"] = {
-            k: round(timings[k], ndigits) for k in stdout_queries
-        }  # ndigits=None -> int, the last-resort 0-decimal rung
-        line = json.dumps(out, separators=(",", ":"))
-        if len(line) <= 1990:
-            break
-    print(line)
+    out["queries_omitted"] = len(timings) - len(STDOUT_QUERIES)
+    print(stdout_line(out, timings))
 
 
 if __name__ == "__main__":
